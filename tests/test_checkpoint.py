@@ -46,27 +46,87 @@ def test_kill_resume_identical(spark, sequences_path, tmp_path):
     assert lin["n_docs"].sum() == 120  # every doc in exactly one bucket
 
 
+def _jobs_started(spark, group: str, fn):
+    """(fn(), number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(spark._jsc.sc().statusTracker().getJobIdsForGroup(group))
+
+
 def test_clean_run_scans_input_once(spark, sequences_path, tmp_path):
     # the number of Spark jobs for a clean run must be a small constant,
     # NOT proportional to n_buckets (the round-1 bug: one input scan per
-    # bucket). One write job + one metrics job + one lineage append ≈ 3-4.
-    sc = spark.sparkContext
-    counts = {}
-    for nb in (4, 16):
-        grp = f"ckpt-one-scan-{nb}"
-        sc.setJobGroup(grp, "clean checkpoint run")
-        try:
-            done = run_checkpointed(spark, sequences_path,
-                                    str(tmp_path / f"onescan{nb}"),
-                                    n_buckets=nb, run_id="onescan")
-        finally:
-            sc.setJobGroup(None, None)
+    # bucket). A fresh store takes 5: input schema inference, the data
+    # write, the per-bucket metrics aggregate (map + result stage) and the
+    # lineage append. No lineage probe job, no footer inference of the
+    # written output.
+    for nb in (4, 8, 16):
+        done, n_jobs = _jobs_started(
+            spark, f"ckpt-one-scan-{nb}",
+            lambda: run_checkpointed(spark, sequences_path,
+                                     str(tmp_path / f"onescan{nb}"),
+                                     n_buckets=nb, run_id="onescan"))
         assert done == list(range(nb))
-        counts[nb] = len(
-            spark._jsc.sc().statusTracker().getJobIdsForGroup(grp))
-    # 4x the buckets must NOT mean 4x the jobs; allow slack for AQE/commit
-    # bookkeeping jobs but fail the per-bucket-loop shape (16+ extra jobs)
-    assert counts[16] <= counts[4] + 2, counts
+        assert n_jobs <= 5, (nb, n_jobs)
+
+
+def test_completed_buckets_on_fresh_store_starts_no_job(spark, tmp_path):
+    got, n_jobs = _jobs_started(
+        spark, "ckpt-fresh-probe",
+        lambda: completed_buckets(spark, str(tmp_path / "nowhere")))
+    assert got == set()
+    assert n_jobs == 0
+
+
+@pytest.mark.parametrize("compressed", [False, True])
+def test_lineage_counts_match_committed_store(spark, sequences_path, tmp_path,
+                                              compressed):
+    """Per-bucket lineage n_docs / n_points equal an independent
+    countDistinct(doc_id) / count(*) (packed: sum(n_windows)) over the
+    committed store; a pending bucket that receives no docs gets zeros."""
+    from pyspark.sql import functions as F
+
+    from tsrollup.io import read_table
+
+    root = str(tmp_path / "contract")
+    # 120 docs over 512 buckets: most buckets of the first 64 get no doc
+    done = run_checkpointed(spark, sequences_path, root, n_buckets=512,
+                            bucket_range=(0, 64), compressed=compressed)
+    assert done == list(range(64))
+    data = read_table(spark, f"{root}/data")
+    pts = F.sum("n_windows") if compressed else F.count("*")
+    want = {r["bucket"]: (r["n_docs"], r["n_points"]) for r in
+            data.groupBy("bucket")
+            .agg(F.countDistinct("doc_id").alias("n_docs"),
+                 pts.cast("long").alias("n_points")).collect()}
+    lin = read_lineage(spark, root)
+    assert dict(lin.dtypes)["n_docs"] == "bigint"
+    assert dict(lin.dtypes)["n_points"] == "bigint"
+    got = {r["bucket"]: (r["n_docs"], r["n_points"]) for r in lin.collect()}
+    assert set(got) == set(range(64))
+    empty = set(range(64)) - set(want)
+    assert empty, "fixture must leave some pending bucket without docs"
+    for b in range(64):
+        assert got[b] == want.get(b, (0, 0)), b
+
+
+def test_literal_frame_round_trips_rows(spark):
+    from tsrollup.checkpoint import LINEAGE_SCHEMA, _literal_frame
+
+    rows = [(0, "done", None, 6 * 10**12, "r'\\x\"${env:HOME}é", 1 / 3, ""),
+            (7, "done", 12, 0, "run-0", float("inf"), "2026-01-01T00:00:00")]
+    df = _literal_frame(spark, rows, LINEAGE_SCHEMA)
+    assert df.dtypes == [("bucket", "int"), ("status", "string"),
+                         ("n_docs", "bigint"), ("n_points", "bigint"),
+                         ("run_id", "string"), ("wall_time_sec", "double"),
+                         ("completed_at", "string")]
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = _literal_frame(spark, [], LINEAGE_SCHEMA)
+    assert empty.dtypes == df.dtypes and empty.count() == 0
 
 
 def test_checkpoint_compressed_mode(spark, sequences_path, tmp_path):

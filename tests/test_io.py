@@ -165,6 +165,66 @@ def test_condition_is_authoritative_over_message_text():
     assert is_missing_table_error(RuntimeError("Path does not exist: /x"))
 
 
+def test_read_table_declared_schema_skips_inference(spark, tmp_path):
+    """A declared-schema read of a (bucket, tier)-partitioned store returns
+    the inferred read's rows and starts no footer-inference job."""
+    from pyspark.sql import functions as F
+
+    from tsrollup.io import read_table, write_table
+
+    df = (spark.range(200)
+          .select((F.col("id") % 3).cast("int").alias("bucket"),
+                  F.when(F.col("id") % 2 == 0, "1m").otherwise("1h")
+                  .alias("tier"),
+                  F.col("id").cast("long").alias("window_start"),
+                  (F.col("id") * 0.5).alias("mean")))
+    p = str(tmp_path / "store")
+    write_table(df, p, partition_by=("bucket", "tier"))
+    sc = spark.sparkContext
+
+    def jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            out = read_table(spark, p, **kw)
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(
+            spark._jsc.sc().statusTracker().getJobIdsForGroup(group))
+
+    declared, n_declared = jobs("declared-read", schema=df.schema)
+    inferred, n_inferred = jobs("inferred-read")
+    assert (n_declared, n_inferred) == (0, 1)
+    assert dict(declared.dtypes) == dict(inferred.dtypes)
+    cols = ["bucket", "tier", "window_start", "mean"]
+    assert (sorted(declared.select(*cols).collect())
+            == sorted(inferred.select(*cols).collect()))
+
+
+def test_read_table_iceberg_ignores_declared_schema(monkeypatch):
+    """An Iceberg table carries its own schema: the branch accepts the
+    argument and loads the table without declaring it."""
+    import tsrollup.io as tio
+
+    class _Reader:
+        def format(self, fmt):
+            assert fmt == "iceberg"
+            return self
+
+        def schema(self, _):
+            raise AssertionError("iceberg reads must not declare a schema")
+
+        def load(self, ident):
+            return ("loaded", ident)
+
+    class _Spark:
+        read = _Reader()
+
+    monkeypatch.setenv("TSROLLUP_TABLE_FORMAT", "iceberg")
+    monkeypatch.setattr(tio, "_ICEBERG_OK", True)
+    assert tio.read_table(_Spark(), "ns.data", schema="x long") == (
+        "loaded", "ns.data")
+
+
 def test_scan_min_parallel_widens_small_scans_only(spark, tmp_path):
     """An under-split scan is repartitioned up to the requested parallelism;
     a scan already at/above it is returned untouched (the production

@@ -30,7 +30,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import BASE_WINDOW, TIER_FACTOR
-from .io import read_table, write_table
+from .io import (is_missing_table_error, read_table, table_format,
+                 write_table)
 from .rollup import rollup_compressed, rollup_sequences
 
 # wall_time_sec is the wall clock of the COMMITTING CALL (all its pending
@@ -47,14 +48,45 @@ def _bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
 
 
-def read_lineage(spark: SparkSession, output_root: str) -> DataFrame:
-    """Empty lineage ONLY when the store genuinely doesn't exist yet (first
-    run). Any other read failure — permissions, storage blip, corrupt files —
-    re-raises: treating it as 'no lineage' would silently mark every bucket
-    pending, i.e. one full input rescan + rewrite of every partition plus
-    duplicate 'done' rows, with no signal that resume state was lost."""
-    from .io import is_missing_table_error, read_table
+def _sql_literal(v) -> str:
+    """``v`` as Spark SQL literal text. Strings go as hex UTF-8, so no
+    content needs escaping (quotes, backslashes, ``${…}`` substitution);
+    floats go as their round-trip repr, which the caller's cast parses back
+    exactly."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode().hex()}' AS STRING)"
+    if isinstance(v, float):
+        return f"'{v!r}'"
+    return str(int(v))
 
+
+def _literal_frame(spark: SparkSession, rows: list[tuple],
+                   schema: str) -> DataFrame:
+    """A few Python-side ``rows`` as a DataFrame of DDL ``schema``, built
+    JVM-side as a literal relation (SQL ``VALUES``) from one SQL text — one
+    Py4J call, not several per value. ``createDataFrame(list)`` ships the
+    rows through a parallelized Python RDD instead, so every write of it
+    pays a Python-worker job. Each row is cast as one struct, by position,
+    to ``schema``."""
+    if not rows:  # VALUES needs a row; an empty literal array does not
+        return spark.sql(
+            f"SELECT inline(CAST(array() AS array<struct<{schema}>>))")
+    values = ", ".join(f"({', '.join(map(_sql_literal, row))})"
+                       for row in rows)
+    return spark.sql(f"SELECT r.* FROM (SELECT CAST(struct(*) AS "
+                     f"struct<{schema}>) AS r FROM VALUES {values})")
+
+
+def _stored_lineage(spark: SparkSession, output_root: str) -> DataFrame | None:
+    """The committed lineage table, or None ONLY when the store genuinely
+    doesn't exist yet (first run) — answered from the missing-path error,
+    with no Spark job. Any other read failure — permissions, storage blip,
+    corrupt files — re-raises: treating it as 'no lineage' would silently
+    mark every bucket pending, i.e. one full input rescan + rewrite of every
+    partition plus duplicate 'done' rows, with no signal that resume state
+    was lost."""
     try:
         return read_table(spark, f"{output_root}/_lineage")
     except Exception as e:
@@ -62,7 +94,7 @@ def read_lineage(spark: SparkSession, output_root: str) -> DataFrame:
         # is_missing_table_error checks the structured error condition
         # (getCondition/getErrorClass) before falling back to the message
         if is_missing_table_error(e):
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
+            return None
         # UNABLE_TO_INFER_SCHEMA is ambiguous: a killed FIRST commit leaves
         # _lineage holding only _temporary/ (genuinely "no lineage yet"),
         # but the same error fires when committed lineage FILES were lost
@@ -72,8 +104,15 @@ def read_lineage(spark: SparkSession, output_root: str) -> DataFrame:
         # committed (non-underscore/dot) entries.
         if "UNABLE_TO_INFER_SCHEMA" in msg and _is_uncommitted_dir(
                 spark, f"{output_root}/_lineage"):
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
+            return None
         raise
+
+
+def read_lineage(spark: SparkSession, output_root: str) -> DataFrame:
+    """The lineage table; empty ONLY when the store doesn't exist yet (see
+    :func:`_stored_lineage` for why every other failure raises)."""
+    lin = _stored_lineage(spark, output_root)
+    return lin if lin is not None else _literal_frame(spark, [], LINEAGE_SCHEMA)
 
 
 def _is_uncommitted_dir(spark: SparkSession, ident: str) -> bool:
@@ -93,9 +132,14 @@ def _is_uncommitted_dir(spark: SparkSession, ident: str) -> bool:
 
 
 def completed_buckets(spark: SparkSession, output_root: str) -> set[int]:
-    rows = (read_lineage(spark, output_root)
-            .filter("status = 'done'").select("bucket").distinct().collect())
-    return {r["bucket"] for r in rows}
+    """Buckets with a ``done`` lineage row. A fresh store answers with no
+    Spark job; an existing one collects its (one row per bucket per commit)
+    lineage and dedups in Python — no distinct() shuffle."""
+    lin = _stored_lineage(spark, output_root)
+    if lin is None:
+        return set()
+    return {r["bucket"] for r in
+            lin.filter("status = 'done'").select("bucket").collect()}
 
 
 def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
@@ -117,6 +161,10 @@ def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
     ``max_buckets`` bounds one spark-submit invocation. Metrics derive from
     one scan of the (small) committed output, which also validates the write.
 
+    Precondition: one input row per ``doc_id``. Lineage ``n_docs`` counts
+    rolled-up docs by their first finest-tier row, so a doc_id repeated
+    across input rows counts once per row.
+
     ``bucket_range=(lo, hi)`` restricts this call to buckets in [lo, hi) —
     the sharding handle for CONCURRENT submissions: give each submission a
     disjoint range and they never contend for the same buckets
@@ -124,8 +172,6 @@ def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
     unranged concurrent runs would duplicate work — same deterministic
     bytes, wasted scans).
     """
-    from .io import read_table, write_table
-
     done = completed_buckets(spark, output_root)
     pending = [b for b in range(n_buckets) if b not in done]
     if bucket_range is not None:
@@ -151,21 +197,30 @@ def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
                 partition_by=("bucket", "tier"), dynamic_overwrite=True)
     wall = time.time() - t0
 
-    # per-bucket metrics from the committed files (one scan of the output)
-    written = read_table(spark, f"{output_root}/data")
+    # per-bucket metrics from the committed files (one scan of the output,
+    # read with the written frame's own schema: no footer-inference job).
+    # n_docs counts each doc's one first row of the finest tier — every
+    # non-empty doc emits exactly one window_start = 0 row per tier (one
+    # packed row per tier) — so one hash aggregate, no countDistinct expand
+    written = read_table(spark, f"{output_root}/data", schema=out.schema)
     written = written.filter(F.col("bucket").isin(pending))
-    pts = F.count("*") if not compressed else F.sum("n_windows")
+    first = F.col("tier") == min(tiers, key=tiers.get)
+    if compressed:
+        pts = F.sum("n_windows")
+    else:
+        pts = F.count("*")
+        first = first & (F.col("window_start") == 0)
     stats = {r["bucket"]: r for r in (
         written.groupBy("bucket")
         .agg(pts.cast("long").alias("n_points"),
-             F.countDistinct("doc_id").alias("n_docs"))
+             F.count_if(first).alias("n_docs"))
         .collect())}
     now = time.strftime("%Y-%m-%dT%H:%M:%S")
     rows = [(b, "done",
              int(stats[b]["n_docs"]) if b in stats else 0,
              int(stats[b]["n_points"]) if b in stats else 0,
              run_id, wall, now) for b in pending]
-    write_table(spark.createDataFrame(rows, LINEAGE_SCHEMA),
+    write_table(_literal_frame(spark, rows, LINEAGE_SCHEMA),
                 f"{output_root}/_lineage", mode="append")
     return pending
 
@@ -200,8 +255,6 @@ def _watermark_state(spark: SparkSession, output_root: str
     try:
         wm = read_table(spark, f"{output_root}/_watermarks")
     except Exception as e:  # noqa: BLE001
-        from .io import is_missing_table_error
-
         if is_missing_table_error(e):
             return {}, set()
         raise
@@ -347,8 +400,6 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     try:
         existing = read_table(spark, f"{output_root}/data")
     except Exception as e:  # noqa: BLE001
-        from .io import is_missing_table_error
-
         if not is_missing_table_error(e):
             raise
         existing = None
@@ -372,7 +423,7 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     now = time.strftime("%Y-%m-%dT%H:%M:%S")
     rows = [(r["source"], int(r["max_seq"]), int(r["n_docs"]),
              int(epoch), run_id, now) for r in stats]
-    write_table(spark.createDataFrame(rows, WATERMARK_SCHEMA),
+    write_table(_literal_frame(spark, rows, WATERMARK_SCHEMA),
                 f"{output_root}/_watermarks", mode="append")
     return int(sum(r["n_docs"] for r in stats))
 
@@ -456,8 +507,6 @@ def epoch_ranges(spark: SparkSession, output_root: str
     try:
         wm = read_table(spark, f"{output_root}/_watermarks")
     except Exception as e:  # noqa: BLE001
-        from .io import is_missing_table_error
-
         if is_missing_table_error(e):
             return {}
         raise
@@ -514,8 +563,6 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
     """
     import os
     import shutil
-
-    from .io import table_format
 
     if "://" in output_root or table_format() == "iceberg":
         raise NotImplementedError(
@@ -630,8 +677,6 @@ def compact_epochs(spark: SparkSession, output_root: str,
     import os
     import shutil
 
-    from .io import table_format
-
     if "://" in output_root or table_format() == "iceberg":
         raise NotImplementedError(
             "directory-swap compaction needs a local-filesystem parquet "
@@ -695,7 +740,6 @@ def apply_retention_to_store(spark: SparkSession, output_root: str,
     and untouched tiers' files are never opened (partition pruning on the
     tier directory key — plan-guarded in tests/test_plans.py).
     """
-    from .io import read_table, write_table
     from .rollup import apply_retention
 
     assert all(n >= 1 for n in keep_windows.values()), \
@@ -726,8 +770,6 @@ def apply_retention_to_store(spark: SparkSession, output_root: str,
 def read_rollup(spark: SparkSession, output_root: str) -> DataFrame:
     """Read back the full rolled-up dataset (all buckets, partition-pruned on
     bucket/tier predicates for free)."""
-    from .io import read_table
-
     return read_table(spark, f"{output_root}/data",
                       base_path=f"{output_root}/data").drop("bucket")
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def table_format() -> str:
@@ -67,16 +68,22 @@ def is_missing_table_error(e: Exception) -> bool:
 
 
 def read_table(spark: SparkSession, ident: str,
-               base_path: str | None = None) -> DataFrame:
+               base_path: str | None = None,
+               schema: StructType | str | None = None) -> DataFrame:
     """``ident`` is a path (parquet) or a catalog table name (iceberg).
     ``base_path`` (parquet only) keeps partition-directory columns when
-    reading a subtree of a partitioned layout."""
+    reading a subtree of a partitioned layout. ``schema`` (parquet only)
+    declares the table's schema, partition columns included, so the read
+    skips the footer-inference job; an Iceberg table carries its own
+    schema, so that branch ignores it."""
     if table_format() == "iceberg":
         _require_iceberg(spark)
         return spark.read.format("iceberg").load(ident)
     r = spark.read
     if base_path is not None:
         r = r.option("basePath", base_path)
+    if schema is not None:
+        r = r.schema(schema)
     return r.parquet(ident)
 
 

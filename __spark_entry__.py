@@ -34,45 +34,33 @@ W0 = 16  # base window for document-token rollups (docs are short)
 
 _SCAN_PARTS: dict[str, int] = {}
 
-# unique (or near-unique) key per fact table for the widening exchange's
-# hash spread — high cardinality, deterministic, never derived from rand()
+# the tables the small-scan guard spreads, each with the unique key it
+# hash-spreads on (high cardinality, deterministic, never derived from rand())
 _SPREAD_KEYS: dict[str, tuple[str, ...]] = {
-    "events": ("event_id",),
-    "documents": ("doc_id",),
-    "embeddings": ("vec_id",),
-    "lineitem": ("l_orderkey", "l_linenumber"),
-    "orders": ("o_orderkey",),
-    "part": ("p_partkey",),
-    "supplier": ("s_suppkey",),
-    "customer": ("c_custkey",),
-}
+    "documents": ("doc_id",), "embeddings": ("vec_id",),
+    "lineitem": ("l_orderkey", "l_linenumber")}
 
 
-def _fact(spark: SparkSession, sf_dir: str, table: str,
-          widen: bool = True) -> DataFrame:
-    """Read a FACT table with the small-scan parallelism guard: the sf
-    fixtures arrive as one single-row-group file per table (row groups are
-    the parquet split atom, so maxPartitionBytes can't subdivide them), and
-    without the guard every pre-shuffle operator — shingle explode, md5,
-    conv position explode, pandas_udf matmuls — runs on ONE core of 32.
-    At 100 TB the guard is a structural no-op (see io.scan_min_parallel).
-    Dimension tables (nation/region/customer/...) stay unwrapped: they ride
-    broadcast joins where an extra exchange is pure loss. The split-count
-    probe (~0.1 s of driver-side RDD conversion) is memoized per path —
-    fixture layouts don't change within a session."""
+def _fact(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Read a FACT table; spread an under-split scan of a table whose
+    per-row work before the first shuffle is heavy (the fixtures are one
+    single-row-group file per table, and a row group is the parquet split
+    atom, so that work would run on one core). Decided per table by
+    same-session A/Bs at sf0.1 on 4 cores: ``documents``/``embeddings`` rows
+    are tokenized, regex-scanned, shingled or sent to Python (unguarded,
+    minhash_signatures ran 1.97x, pii_scan 1.59x); ``lineitem`` rows feed
+    wide-decimal arithmetic (unguarded, revenue_by_nation ran 1.37x).
+    ``events`` and ``orders`` are never spread: their first keyed exchange
+    spreads them (guarded, topk_events ran 1.37x; spreading orders too cost
+    revenue_by_nation 1.13x). A no-op at production split counts."""
     from tsrollup.io import parquet_split_atoms, scan_min_parallel
 
     path = f"{sf_dir}/{table}.parquet"
     df = spark.read.parquet(path)
-    if not widen:
-        # scan→aggregate / window-first queries opt OUT: their map-side
-        # partial aggregation (or their first keyed exchange) already
-        # reduces before the only shuffle they need, so a widening
-        # exchange of the full projected rows is pure loss (measured
-        # +0.1–0.8 s per row at sf1.0); the heavy pre-shuffle compute the
-        # guard exists for isn't there
+    keys = _SPREAD_KEYS.get(table)
+    if keys is None:
         return df
-    n = _SCAN_PARTS.get(path)
+    n = _SCAN_PARTS.get(path)  # the probe costs ~0.1 s; memoized per path
     if n is None:
         n = df.rdd.getNumPartitions()
         # clamp by the ROW-GROUP count: nominal size-based splits whose byte
@@ -88,12 +76,15 @@ def _fact(spark: SparkSession, sf_dir: str, table: str,
     # hash-spread on the table's unique key, not round-robin: round-robin
     # pays a per-input-partition local sort (sortBeforeRepartition) that
     # runs on the scan's few real tasks — the serial bottleneck again
-    return scan_min_parallel(df, known_partitions=n,
-                             spread_cols=_SPREAD_KEYS.get(table))
+    return scan_min_parallel(df, known_partitions=n, spread_cols=keys)
 
 
 def _docs(spark: SparkSession, sf_dir: str, widen: bool = True) -> DataFrame:
-    return _fact(spark, sf_dir, "documents", widen=widen)
+    """``widen=False`` marks a light read (aggregate-first, or a bare key
+    projection feeding a join): a measured per-query fact, not a rule."""
+    if not widen:
+        return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return _fact(spark, sf_dir, "documents")
 
 
 def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,7 +590,7 @@ def q_segment_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation of the lineage (the earlier two-branch form re-ran the scan
     and window twice; plan-guarded). Merged to free an oracle slot for
     range_join."""
-    ev = _fact(spark, sf_dir, "events", widen=False)
+    ev = _fact(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev_us = F.unix_micros(F.lag("ts").over(w).cast("timestamp"))
@@ -637,7 +628,7 @@ def q_segment_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rolling_mean_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling mean over an ordered frame ≙ reference moving_average
     (IGN_experiment.py:190-205)."""
-    ev = _fact(spark, sf_dir, "events", widen=False)
+    ev = _fact(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-3, 0)
     return ev.select("event_id", F.avg("value").over(w).alias("rmean"))
 
@@ -1021,7 +1012,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE division of exact int64s. Two data-sized exchanges."""
     from tsrollup.counters import retention_cohorts
 
-    return retention_cohorts(_fact(spark, sf_dir, "events", widen=False))
+    return retention_cohorts(_fact(spark, sf_dir, "events"))
 
 
 def q_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1208,9 +1199,7 @@ def q_grid_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     last_value IGNORE NULLS)."""
     from tsrollup.counters import grid_gapfill
 
-    # widen=False: grid_gapfill's own series repartition is the (only)
-    # spreading exchange — a widening exchange right before it is loss
-    return grid_gapfill(_fact(spark, sf_dir, "events", widen=False))
+    return grid_gapfill(_fact(spark, sf_dir, "events"))
 
 
 def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1248,7 +1237,7 @@ def q_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-join runs at grid grain. Bit-exact tail oracle."""
     from tsrollup.counters import period_over_period
 
-    return period_over_period(_fact(spark, sf_dir, "events", widen=False),
+    return period_over_period(_fact(spark, sf_dir, "events"),
                               series_cols=("event_type",))
 
 
@@ -1307,7 +1296,7 @@ def q_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionize's per-user exchange. Bit-exact tail oracle."""
     from tsrollup.segments import funnel_counts
 
-    return funnel_counts(_fact(spark, sf_dir, "events", widen=False))
+    return funnel_counts(_fact(spark, sf_dir, "events"))
 
 
 def q_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1320,7 +1309,7 @@ def q_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact tail oracle."""
     from tsrollup.counters import hampel_filter
 
-    return hampel_filter(_fact(spark, sf_dir, "events", widen=False))
+    return hampel_filter(_fact(spark, sf_dir, "events"))
 
 
 def q_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1333,7 +1322,7 @@ def q_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bit-exact tail oracle."""
     from tsrollup.counters import histogram_quantile
 
-    return histogram_quantile(_fact(spark, sf_dir, "events", widen=False), 9, 10,
+    return histogram_quantile(_fact(spark, sf_dir, "events"), 9, 10,
                               series_cols=("event_type",))
 
 
@@ -1381,7 +1370,7 @@ def q_histogram_quantile_hourly(spark: SparkSession, sf_dir: str
     oracle."""
     from tsrollup.counters import histogram_quantile
 
-    ev = _fact(spark, sf_dir, "events", widen=False).withColumn(
+    ev = _fact(spark, sf_dir, "events").withColumn(
         "hour_ts", F.date_trunc("hour", F.col("ts")))
     return histogram_quantile(ev, 9, 10,
                               series_cols=("event_type", "hour_ts"))
@@ -1436,7 +1425,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ, double division does not). One exchange."""
     from tsrollup.counters import time_weighted_avg
 
-    return time_weighted_avg(_fact(spark, sf_dir, "events", widen=False))
+    return time_weighted_avg(_fact(spark, sf_dir, "events"))
 
 
 def q_quantile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1460,7 +1449,7 @@ def q_cadence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series grouping; tail-oracle hash-exact."""
     from tsrollup.counters import cadence_gaps
 
-    return cadence_gaps(_fact(spark, sf_dir, "events", widen=False),
+    return cadence_gaps(_fact(spark, sf_dir, "events"),
                         cadence_seconds=3600)
 
 
@@ -1618,7 +1607,7 @@ def q_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange."""
     from tsrollup.counters import disorder_stats
 
-    return disorder_stats(_fact(spark, sf_dir, "events", widen=False))
+    return disorder_stats(_fact(spark, sf_dir, "events"))
 
 
 def q_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1700,7 +1689,7 @@ def q_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the single IEEE division."""
     from tsrollup.segments import interval_coverage
 
-    ev = _fact(spark, sf_dir, "events", widen=False).filter(F.col("ts").isNotNull())
+    ev = _fact(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     iv = ev.select("user_id", us.alias("start_us"),
                    (us + F.lit(300_000_000)).alias("end_us"))
@@ -1731,7 +1720,7 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     One pair-grain exchange after the bucket self-join."""
     from tsrollup.counters import spearman_matrix
 
-    return spearman_matrix(_fact(spark, sf_dir, "events", widen=False))
+    return spearman_matrix(_fact(spark, sf_dir, "events"))
 
 
 def q_threshold_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1754,7 +1743,7 @@ def q_value_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int64 div binning, one (bucket, bin) exchange."""
     from tsrollup.counters import value_heatmap
 
-    return value_heatmap(_fact(spark, sf_dir, "events", widen=False), bin_cents=500)
+    return value_heatmap(_fact(spark, sf_dir, "events"), bin_cents=500)
 
 
 def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1788,7 +1777,7 @@ def q_topn_others(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-group reuses the bucket partitioning."""
     from tsrollup.counters import topn_others
 
-    return topn_others(_fact(spark, sf_dir, "events", widen=False), n=3)
+    return topn_others(_fact(spark, sf_dir, "events"), n=3)
 
 
 def q_wfdb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2235,7 +2224,7 @@ def q_one_hot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    StructType)
 
     csv_dir = _scratch(sf_dir, "onehot-csv")
-    (_fact(spark, sf_dir, "events", widen=False)
+    (_fact(spark, sf_dir, "events")
      .select(F.col("event_id").cast("long"), F.col("user_id").cast("long"),
              "event_type")
      .write.mode("overwrite").option("header", True).csv(csv_dir))
@@ -2311,8 +2300,6 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     edges = lsh_candidate_pairs(docs, k=4, bands=2, n=3, max_bucket=100)
-    # nodes leg: bare doc_id projection feeding a join — the widening
-    # exchange would be pure loss (scan→join, no pre-shuffle compute)
     return near_dup_clusters(
         edges, _docs(spark, sf_dir, widen=False).select("doc_id"))
 
@@ -2355,9 +2342,7 @@ def q_segment_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-length zero-padded segments."""
     from tsrollup.segments import extract_segments
 
-    # widen=False: the user_id window exchange right after the scan is
-    # the spreading shuffle (A/B at sf1.0: 1.37 s vs 1.97 s widened)
-    ev = _fact(spark, sf_dir, "events", widen=False)
+    ev = _fact(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ev2 = ev.withColumn("pos", F.row_number().over(w) - 1)
     signal = (ev2.groupBy("user_id")
@@ -2616,7 +2601,7 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller (libm rule). One (group, digit)-grain exchange."""
     from tsrollup.counters import benford_census
 
-    return benford_census(_fact(spark, sf_dir, "events", widen=False))
+    return benford_census(_fact(spark, sf_dir, "events"))
 
 
 def q_energy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:

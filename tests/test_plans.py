@@ -20,6 +20,7 @@ def seqs(spark, sequences_path):
 # by construction, not by dual edits
 from tsrollup.planaudit import formatted_plan as _plan  # noqa: E402
 from tsrollup.planaudit import n_data_exchanges as _n_exchanges  # noqa: E402
+from tsrollup.planaudit import split_exchanges  # noqa: E402
 
 
 def test_rollup_scale_path_has_no_exchange(spark, seqs):
@@ -71,6 +72,42 @@ def test_pricing_summary_pushes_partial_agg(spark):
     assert n_hash == 1, plan
     # partial + final pair ⇒ map-side combine around the one hash exchange
     assert len(re.findall(r"^\(\d+\) HashAggregate", plan, re.M)) == 2, plan
+
+
+@pytest.mark.parametrize("name, n_guard", [
+    ("topk_events", 0),         # events: never spread
+    ("revenue_by_nation", 1),   # lineitem spread, orders never
+    ("pricing_summary", 1),     # lineitem: wide-decimal partial agg
+    ("minhash_signatures", 1),  # documents: shingle+md5 work pre-shuffle
+])
+def test_scan_guard_spreads_per_table(spark, name, n_guard):
+    import __spark_entry__ as entrymod
+
+    plan = _plan(entrymod.queries()[name](spark, "/root/testdata/sf0.001"))
+    assert split_exchanges(plan)[1] == n_guard, plan
+
+
+def test_numbered_repartition_is_a_data_exchange(spark, tmp_path):
+    """salted_repartition(num_partitions=n) carries the same
+    REPARTITION_BY_NUM tag as the small-scan guard but is a data shuffle:
+    it must not count as a guard, on an in-memory frame or a file scan."""
+    import pandas as pd
+
+    from tsrollup.io import scan_min_parallel
+    from tsrollup.rollup import salted_repartition
+
+    local = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": ["a", "b"], "source": ["s", "t"]}))
+    local.write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    for df in (local, docs):
+        plan = _plan(salted_repartition(df, num_partitions=8))
+        assert split_exchanges(plan) == (1, 0), plan
+    # the guard itself on the same scan is still recognized
+    plan = _plan(scan_min_parallel(docs, min_partitions=8,
+                                   known_partitions=1,
+                                   spread_cols=("doc_id",)))
+    assert split_exchanges(plan) == (0, 1), plan
 
 
 def test_revenue_join_broadcasts_dims(spark):

@@ -124,9 +124,12 @@ def main() -> int:
         "equi-join on the bucket); their",
         "MANY-SHUFFLES likewise count the tiny post-histogram marginal",
         "aggregations (one raw-data exchange each).",
-        "`guard` counts the small-scan RoundRobin repartition",
-        "(io.scan_min_parallel — present only on under-split fixture files,",
-        "structurally absent at production split counts).", "",
+        "`guard` counts the small-scan widening exchange",
+        "(io.scan_min_parallel): a hash spread of an under-split",
+        "`documents`, `embeddings` or `lineitem` scan on its unique key.",
+        "It is present only on under-split fixture files and structurally",
+        "absent at production split counts; `events` and `orders` are",
+        "never spread.", "",
         hdr,
         "|---" * 12 + "|",
     ]

@@ -39,16 +39,6 @@ def _shingles_of(w: Column, n: int) -> Column:
         F.transform(idx, lambda i: F.array_join(F.slice(w, i + 1, n), " ")))
 
 
-def staged_shingles(df: DataFrame, n: int = 3,
-                    text_col: str = "text") -> DataFrame:
-    """(doc_id, _sh: array<string>) with the word split STAGED as a column
-    before the shingle transform — measured 4× over inlining the split into
-    the lambda (which re-splits the text per shingle element; the same
-    O(n)→O(n²) staging trap documented on znorm/softmax)."""
-    return (df.select("doc_id", F.split(F.col(text_col), " ").alias("_w"))
-            .select("doc_id", _shingles_of(F.col("_w"), n).alias("_sh")))
-
-
 def word_shingles(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     """Exploded form (doc_id, shingle) — for the shared-shingle pair join.
 
@@ -183,8 +173,10 @@ def minhash_signatures(df: DataFrame, k: int = 8, n: int = 3,
     interpreter overhead per element per column, while the exploded form
     runs the whole hash chain in generated code (measured 1.4 s vs 2.2 s
     at sf1.0, bit-identical; feeds lsh_pairs and dedup_cluster too).
-    explode_outer keeps the (doc_id, NULL…) row the HOF form emitted for
-    docs with fewer than ``n`` words (min over an empty group is NULL).
+    explode_outer only matters for NULL text (split(NULL) is a NULL array):
+    it keeps that doc's (doc_id, NULL…) row, as the HOF form did. A doc
+    with fewer than ``n`` words is not NULL — _shingles_of's clamped bound
+    still emits one truncated shingle for it.
 
     md5 economy: one 128-bit digest yields TWO disjoint 60-bit hashes
     (hex slices [1..15] and [16..30]), so k signatures cost ⌈k/2⌉ md5

@@ -205,7 +205,7 @@ def scan_min_parallel(df: DataFrame,
     At production scale this is a structural NO-OP — a real table carries
     orders of magnitude more splits than cores — so plans on big inputs are
     untouched; only the pathological small-scan case pays one small
-    round-robin exchange.
+    exchange.
 
     ``known_partitions`` lets a caller that memoizes the split-count probe
     (the probe is ~0.1 s of driver-side RDD conversion per call) skip it —

@@ -373,6 +373,7 @@ def heavy_hitters(df: DataFrame, threshold_num: int = 1,
     return (exploded
             .withColumn("h", F.xxhash64("word"))
             .join(F.broadcast(cand_df), "h")
+            # keyed on the word STRING, never h: colliding words count apart
             .groupBy("word")
             .agg(F.count("*").cast("long").alias("n_occ"))
             .filter(F.col("n_occ") * den > F.lit(n_corpus) * num)
